@@ -14,9 +14,12 @@ Differences, by design:
 - dataframe-returning methods return :class:`H3DataFrame` /
   ``pyspark.sql.DataFrame`` (lazy, distributed) rather than
   driver-resident wrappers; call ``.to_pandas()`` where the reference
-  returned eagerly materialized frames;
-- ``num_connections``-style knobs are accepted and ignored — Spark's
-  scheduler owns parallelism.
+  returned eagerly materialized frames. Traversal steps are the
+  exception: each arrives materialized on the driver, as in the
+  reference;
+- ``num_connections`` is the traversal's prefetch width (steps run
+  concurrently ahead of the consumer); Spark's scheduler owns the
+  parallelism inside each step.
 """
 
 from __future__ import annotations

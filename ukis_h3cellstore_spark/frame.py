@@ -8,6 +8,14 @@ pandas/pyarrow are provided for API parity, but unlike the reference —
 where the dataframe is always driver-resident — the wrapped object here
 is a *lazy distributed* DataFrame; conversions collect and should only
 be used on query results that fit the driver.
+
+:meth:`H3DataFrame.materialize` gives the reference's driver-resident
+form: a copy holding a **snapshot**, the result collected once as a
+``pyarrow.Table``. ``to_arrow``, ``to_pandas``, ``to_polars`` and
+``count`` then answer from the snapshot without a Spark job (pandas
+conversion as Spark's Arrow-enabled ``toPandas`` does it), while
+``.df`` stays the lazy plan for further composition and plan
+inspection. Traversal steps arrive materialized.
 """
 
 from __future__ import annotations
@@ -19,13 +27,22 @@ from ukis_h3cellstore_spark.h3 import expressions as hx
 
 
 class H3DataFrame:
-    def __init__(self, df: DataFrame, h3index_column_name: str = "h3index"):
+    def __init__(
+        self, df: DataFrame, h3index_column_name: str = "h3index", snapshot=None
+    ):
         if h3index_column_name not in df.columns:
             raise ValueError(
                 f"h3index column {h3index_column_name!r} not in {df.columns}"
             )
         self.df = df
         self.h3index_column_name = h3index_column_name
+        #: the collected result of ``df`` (``pyarrow.Table``), or None
+        self.snapshot = snapshot
+
+    def materialize(self) -> "H3DataFrame":
+        """A copy holding the collected result: one Spark job here,
+        none in the copy's exports."""
+        return H3DataFrame(self.df, self.h3index_column_name, self.df.toArrow())
 
     # -- column helpers -----------------------------------------------------
 
@@ -96,10 +113,14 @@ class H3DataFrame:
     # -- exports (parity with DataFrameWrapper.to_pandas/to_arrow) ----------
 
     def to_pandas(self):
-        return self.df.toPandas()
+        if self.snapshot is None:
+            return self.df.toPandas()
+        return _arrow_to_pandas(self.snapshot, self.df)
 
     def to_arrow(self):
-        return self.df.toArrow()
+        if self.snapshot is None:
+            return self.df.toArrow()
+        return self.snapshot
 
     def to_polars(self):
         """Reference ``DataFrameWrapper.to_polars`` (frame.py:50-82);
@@ -110,10 +131,12 @@ class H3DataFrame:
             raise ImportError(
                 "to_polars requires the optional 'polars' package"
             ) from e
-        return polars.from_arrow(self.df.toArrow())
+        return polars.from_arrow(self.to_arrow())
 
     def count(self) -> int:
-        return self.df.count()
+        if self.snapshot is None:
+            return self.df.count()
+        return self.snapshot.num_rows
 
     @property
     def columns(self) -> list[str]:
@@ -121,3 +144,37 @@ class H3DataFrame:
 
     def __repr__(self) -> str:
         return f"H3DataFrame(h3index_column={self.h3index_column_name!r}, df={self.df})"
+
+
+def _arrow_to_pandas(table, df: DataFrame):
+    """``table`` (the collected ``df``) as ``df.toPandas()`` returns it
+    with Arrow enabled: the same pyarrow options, the empty-result
+    frame, and Spark's per-column converters (time zones, structs)."""
+    import pandas as pd
+    from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+    if table.num_rows > 0:
+        pdf = table.rename_columns(
+            [f"col_{i}" for i in range(table.num_columns)]
+        ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+        pdf.columns = df.columns
+    else:
+        pdf = pd.DataFrame(columns=df.columns)
+    if len(pdf.columns) == 0:
+        return pdf
+    jconf = df.sparkSession._jconf
+    struct_in_pandas = jconf.pandasStructHandlingMode()
+    legacy = struct_in_pandas == "legacy"
+    return pd.concat(
+        [
+            _create_converter_to_pandas(
+                field.dataType,
+                field.nullable,
+                timezone=jconf.sessionLocalTimeZone(),
+                struct_in_pandas="dict" if legacy else struct_in_pandas,
+                error_on_duplicated_field_names=legacy,
+            )(pser)
+            for (_, pser), field in zip(pdf.items(), df.schema.fields)
+        ],
+        axis="columns",
+    )

@@ -269,3 +269,58 @@ def uncompact_cells_subset(
     that appear in ``subset`` are produced."""
     allowed = set(subset)
     return [c for c in uncompact_cells(cells, target_res) if c in allowed]
+
+
+#: digits 1..15 all set to 6 (the highest digit of a valid cell)
+_SIX_DIGITS = int("6" * MAX_RESOLUTION, 8)
+
+
+def descendant_ranges(cells: Iterable[int], res: int) -> list[tuple[int, int]]:
+    """The cells of ``change_resolution(cells, res)`` as sorted, merged
+    closed integer intervals ``(lo, hi)``.
+
+    A cell at resolution r ≤ ``res`` maps to its res-``res`` descendant
+    interval: digits r+1..res set to 0 (``lo``) or to 6 (``hi``). In
+    integer order the res-``res`` indexes sort by (base cell, digits),
+    so every valid res-``res`` index in that interval is a descendant
+    — pentagon K-axis indexes inside it are invalid and never stored.
+    A finer cell maps to its res-``res`` parent, a one-index interval.
+    Overlapping intervals (a cell and its own child) and adjacent ones
+    (no digit-0..6 index between them, e.g. all 7 siblings) merge.
+    Vectorized: auto queries may pass continent-sized cell lists."""
+    import numpy as np
+
+    sevens = trailing_sevens(res)
+    # by cell resolution k: the bits of digits k+1..res (none if k >= res)
+    between = np.array(
+        [
+            trailing_sevens(k) ^ sevens if k < res else 0
+            for k in range(MAX_RESOLUTION + 1)
+        ],
+        dtype=np.int64,
+    )
+    c = np.unique(np.asarray(cells, dtype=np.int64))
+    if c.size == 0:
+        return []
+    k = (c >> 52) & 0xF
+    at_res = (c & ~np.int64(_RES_MASK)) | np.int64((res << 52) | sevens)
+    lo = at_res & ~between[k]
+    hi = lo | (between[k] & np.int64(_SIX_DIGITS))
+    order = np.argsort(lo, kind="stable")
+    lo, hi = lo[order], hi[order]
+
+    def rank(x):
+        """Position among the res-``res`` indexes with digits 0..6:
+        base cell and digits read as one base-7 number."""
+        out = (x >> 45) & 0x7F
+        for d in range(1, res + 1):
+            out = out * 7 + ((x >> _digit_shift(d)) & 7)
+        return out
+
+    reach = np.maximum.accumulate(rank(hi))
+    first = np.ones(lo.size, dtype=bool)
+    first[1:] = rank(lo)[1:] > reach[:-1] + 1
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], lo.size) - 1
+    his = np.maximum.accumulate(hi)[ends]
+    return list(zip(lo[starts].tolist(), his.tolist()))

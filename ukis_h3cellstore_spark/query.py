@@ -15,14 +15,25 @@ select.rs``. Two query flavors:
   ClickHouse dialect are provided by
   :func:`ukis_h3cellstore_spark.functions.register_h3_sql_functions`.
 
-Cell predicates are pushed as IN-literal lists for small sets (so
-Catalyst folds them into parquet filters / partition pruning) and as
-broadcast semi-joins beyond — the scale-safe replacement for the
-reference's always-literal SQL (SURVEY §7.2.9).
+Cell predicates of auto queries are descendant ranges where they can
+be: a cell at or coarser than a table's resolution R covers one
+contiguous interval of res-R indexes, so the per-table filter is
+``h3index BETWEEN lo AND hi`` over the merged intervals
+(:func:`ranges_predicate`; cells finer than R become their parents'
+single indexes) — Parquet min/max statistics prune the scan, and no
+cell list is shipped to Spark. This is the Spark form of ClickHouse
+answering the reference's ``IN`` list as a primary-key range scan.
+Templated queries, and cell sets needing more than
+``MAX_INLIST_CELLS`` intervals, use IN-literal lists for small sets
+and broadcast semi-joins beyond — the scale-safe replacement for the
+reference's always-literal SQL (SURVEY §7.2.9). Temp-view names take
+one id per call from a process-wide counter, so concurrent templated
+queries (the traversal's prefetch threads) never share a view.
 """
 
 from __future__ import annotations
 
+import itertools
 import re
 from dataclasses import dataclass
 
@@ -33,9 +44,11 @@ PLACEHOLDER_TABLE = "<[table]>"
 PLACEHOLDER_H3INDEXES = "<[h3indexes]>"
 
 #: Cell lists up to this size become IN-literals, larger ones broadcast
-#: joins. Kept small: a multi-thousand-literal isin repeated per
-#: pyramid table costs more in Catalyst analysis than the broadcast it
-#: avoids, and the broadcast path is the one that scales.
+#: joins; auto queries needing at most this many descendant ranges per
+#: table filter on ranges instead. Kept small: a multi-thousand-literal
+#: isin repeated per pyramid table costs more in Catalyst analysis than
+#: the broadcast it avoids, and the broadcast path is the one that
+#: scales.
 MAX_INLIST_CELLS = 256
 
 #: Probe-side broadcast ceiling for cell-set semi-joins, in CELLS.
@@ -48,7 +61,8 @@ MAX_INLIST_CELLS = 256
 #: DataFrame-probe path exists for.
 BROADCAST_MAX_CELLS = 5_000_000
 
-_VIEW_COUNTER = [0]
+#: temp-view ids; ``next()`` on it is atomic under the GIL
+_VIEW_IDS = itertools.count(1)
 
 
 class QueryTemplateError(ValueError):
@@ -116,6 +130,26 @@ def cells_predicate(
     )
 
 
+def ranges_predicate(
+    df: DataFrame, h3name: str, ranges: list[tuple[int, int]]
+) -> DataFrame:
+    """Cell-membership filter over closed index intervals (see
+    :func:`ukis_h3cellstore_spark.h3.cells.descendant_ranges`):
+    one-index intervals as one IN-literal list, the rest as BETWEENs,
+    OR-ed as a balanced tree (flat depth for Catalyst's recursion)."""
+    col = F.col(h3name)
+    points = [lo for lo, hi in ranges if lo == hi]
+    terms = [col.between(lo, hi) for lo, hi in ranges if lo != hi]
+    if points:
+        terms.append(col.isin(points))
+    while len(terms) > 1:
+        terms = [
+            terms[i] | terms[i + 1] if i + 1 < len(terms) else terms[i]
+            for i in range(0, len(terms), 2)
+        ]
+    return df.filter(terms[0] if terms else F.lit(False))
+
+
 def normalize_cells_df(
     spark: SparkSession, cells_df: DataFrame, h3name: str,
     from_res: int, to_res: int,
@@ -174,12 +208,12 @@ def build_table_query_df(
         if n_cells is not None and n_cells <= BROADCAST_MAX_CELLS:
             probe = F.broadcast(probe)
         return df.select(*proj).join(probe, on=h3name, how="leftsemi")
-    _VIEW_COUNTER[0] += 1
-    view = f"__h3cs_table_{_VIEW_COUNTER[0]}"
+    view_id = next(_VIEW_IDS)
+    view = f"__h3cs_table_{view_id}"
     df.createOrReplaceTempView(view)
     sql = query.template.replace(PLACEHOLDER_TABLE, view)
     if PLACEHOLDER_H3INDEXES in sql:
-        cells_view = f"__h3cs_cells_{_VIEW_COUNTER[0]}"
+        cells_view = f"__h3cs_cells_{view_id}"
         table_cells_df.createOrReplaceTempView(cells_view)
         sql = sql.replace(
             PLACEHOLDER_H3INDEXES, f"(SELECT {h3name} FROM {cells_view})"
@@ -210,8 +244,8 @@ def build_table_query(
         out = df.select(*proj)
         return cells_predicate(spark, out, h3name, table_cells)
 
-    _VIEW_COUNTER[0] += 1
-    view = f"__h3cs_table_{_VIEW_COUNTER[0]}"
+    view_id = next(_VIEW_IDS)
+    view = f"__h3cs_table_{view_id}"
     df.createOrReplaceTempView(view)
     sql = query.template.replace(PLACEHOLDER_TABLE, view)
     if PLACEHOLDER_H3INDEXES in sql:
@@ -224,7 +258,7 @@ def build_table_query(
             # into the SQL text and stall the parser; an IN-subquery
             # over a temp view plans as the same semi-join
             # cells_predicate uses, with identical semantics
-            cells_view = f"__h3cs_cells_{_VIEW_COUNTER[0]}"
+            cells_view = f"__h3cs_cells_{view_id}"
             cells_frame(spark, "__cell", table_cells).createOrReplaceTempView(
                 cells_view
             )

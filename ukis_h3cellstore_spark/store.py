@@ -18,8 +18,9 @@ table, written with:
 
 All pipelines are lazy DataFrame compositions — Catalyst plans the
 scans, semi-joins, unions and aggregations; there is no driver-side
-row movement anywhere (cell lists are turned into broadcast join
-sides, not IN-literal SQL, once they exceed a small threshold).
+row movement anywhere (auto queries filter on descendant index ranges;
+other cell lists are turned into broadcast join sides, not IN-literal
+SQL, once they exceed a small threshold).
 """
 
 from __future__ import annotations
@@ -39,8 +40,8 @@ from ukis_h3cellstore_spark.h3 import expressions as hx
 from ukis_h3cellstore_spark import query as build_query
 from ukis_h3cellstore_spark.query import (
     TableSetQuery,
+    auto_projection_columns,
     build_table_query,
-    cells_predicate,
 )
 from ukis_h3cellstore_spark.schema import (
     CompactedTableSchema,
@@ -1098,9 +1099,18 @@ class CellStore:
         do_uncompact: bool = True,
     ) -> H3DataFrame:
         """The read pipeline (reference Q2, mod.rs:333-379 +
-        select.rs:73-162): per contributing table, semi-join against the
-        query cells normalized to that table's resolution; union all;
+        select.rs:73-162): per contributing table, filter to the query
+        cells normalized to that table's resolution; union all;
         uncompact to the requested resolution restricted to the cells.
+
+        Auto queries filter each table on descendant ranges
+        (``h3c.descendant_ranges``) while a table needs at most
+        ``MAX_INLIST_CELLS`` of them — no cell list reaches Spark, and
+        Parquet min/max statistics prune the scan. The final
+        uncompaction semi-join is kept only where it can drop rows: for
+        templated queries (the template owns filtering) and when a
+        queried cell is finer than a table the query reads (that
+        table's row then uncompacts beyond the cell).
         """
         if not cells:
             raise ValueError("empty cell list")  # select.rs:87-89 parity
@@ -1110,6 +1120,8 @@ class CellStore:
         metas = ts.tables_to_satisfy_query_at_resolution(h3_resolution)
 
         cells = [c for c in cells if h3c.is_valid_cell(c)]
+        if not cells:
+            raise ValueError("no tables satisfy the query")
         # prune tables never written: keeps both the scan union and the
         # uncompaction expansion to the resolutions that can hold data
         # (an empty res-0 compacted branch would otherwise cross-join a
@@ -1124,21 +1136,30 @@ class CellStore:
         any_pentagon = any(
             h3c.get_base_cell(c) in h3c.PENTAGON_BASE_CELLS for c in cells
         )
+        auto = query is None or query.template is None
+        columns = list(schema.spark_schema().names)
         parts: list[DataFrame] = []
         for meta in metas:
-            table_cells = h3c.change_resolution(cells, meta.resolution)
-            if not table_cells:
-                continue
             tdf = self.read_table(schema, meta)
-            tdf = self._prune_partitions(schema, tdf, meta, table_cells)
-            tdf = build_table_query(
-                self.spark,
-                tdf,
-                h3name,
-                table_cells,
-                query,
-                list(schema.spark_schema().names),
+            tdf = self._prune_partitions(schema, tdf, meta, cells)
+            ranges = (
+                h3c.descendant_ranges(cells, meta.resolution) if auto else None
             )
+            if ranges is not None and len(ranges) <= build_query.MAX_INLIST_CELLS:
+                tdf = build_query.ranges_predicate(
+                    tdf.select(*auto_projection_columns(columns, h3name)),
+                    h3name,
+                    ranges,
+                )
+            else:
+                tdf = build_table_query(
+                    self.spark,
+                    tdf,
+                    h3name,
+                    h3c.change_resolution(cells, meta.resolution),
+                    query,
+                    columns,
+                )
             if do_uncompact and meta.resolution < h3_resolution:
                 # each table holds exactly its own resolution, so the
                 # expansion happens per table — single scan, no
@@ -1152,13 +1173,16 @@ class CellStore:
                     filter_invalid=any_pentagon,
                 )
             parts.append(tdf)
-        if not parts:
-            raise ValueError("no tables satisfy the query")
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
 
-        if do_uncompact:
+        # exact per-table filters leave only descendants of the queried
+        # cells when none is finer than the coarsest table read
+        restricted = auto and max(map(h3c.get_resolution, cells)) <= min(
+            m.resolution for m in metas
+        )
+        if do_uncompact and not restricted:
             cells_at_res = h3c.change_resolution(cells, h3_resolution)
             cells_df = build_query.cells_frame(
                 self.spark, h3name, cells_at_res
@@ -1496,9 +1520,10 @@ class CellStore:
     ) -> DataFrame:
         """Push the query's H3 partition values into the scan so Spark
         prunes parquet partitions (O3): derive the distinct partition
-        values of the requested cells. Tables in "global" layout mode
-        hold a single constant partition — nothing to prune (and a
-        basecell IN-list would wrongly exclude it)."""
+        values of the requested cells (any resolutions — a cell coarser
+        than the partition resolution spans its children). Tables in
+        "global" layout mode hold a single constant partition — nothing
+        to prune (and a basecell IN-list would wrongly exclude it)."""
         if self._table_mode(schema, meta) == "global":
             return df
         if schema.h3_partitioning.kind == "basecell":
@@ -1506,7 +1531,7 @@ class CellStore:
         else:
             diff = schema.h3_partitioning.resolution_difference
             target = max(meta.resolution - diff, 0)
-            values = sorted({h3c.cell_to_parent(c, target) for c in cells})
+            values = h3c.change_resolution(cells, target)
         if len(values) <= MAX_INLIST_CELLS:
             df = df.filter(F.col("h3part").isin(values))
         elif len(values) <= STATIC_PRUNE_MAX_PARTITIONS:

@@ -12,9 +12,12 @@ traversal.rs``) Spark-first:
   ``TraversedCell(cell, contained_data)`` — one H3DataFrame per
   traversal cell, empty results skipped (traversal.rs:452-456),
   traversal cells sorted+deduped for determinism (traversal.rs:158-160).
-  The reference fans out over ``num_connections`` gRPC workers; on
-  Spark each step IS a distributed job, so the worker pool disappears
-  — parallelism comes from executors scanning partitions.
+  Like the reference's ``num_connections`` worker pool, up to that many
+  prefetch threads run steps ahead of the consumer: each thread plans
+  a step's Q2 query, runs it once and materializes the result on the
+  driver (:meth:`H3DataFrame.materialize`), so emptiness is a row
+  count and the consumer's ``to_pandas``/``to_arrow`` submit no Spark
+  job. A failing step stops the pool and surfaces from ``next()``.
 - **Prefilter** (P4, traversal.rs:357-393): an optional templated
   filter query run at the traversal resolution in chunks of
   ``PREFILTER_CHUNK_SIZE`` cells; only cells for which it returns rows
@@ -105,10 +108,12 @@ class TraversedCell:
 
 @dataclass
 class Traverser:
-    """Pull-based iterator over an area of interest — each ``next()``
-    runs one bounded Q2 query (reference Stream impl
-    traversal.rs:177-205; Python iterator
-    ukis_h3cellstorepy/src/clickhouse/traversal.rs:124-155)."""
+    """Pull-based iterator over an area of interest — each step is one
+    bounded Q2 query, run and materialized in a prefetch thread
+    (reference Stream impl traversal.rs:177-205; Python iterator
+    ukis_h3cellstorepy/src/clickhouse/traversal.rs:124-155). Each
+    yielded ``contained_data`` holds its snapshot; its ``.df`` is the
+    step's lazy plan."""
 
     store: object  # CellStore; duck-typed to avoid an import cycle
     tableset_name: str
@@ -133,7 +138,7 @@ class Traverser:
     def __iter__(self) -> Iterator[TraversedCell]:
         return self
 
-    def _fetch(self, cell: int):
+    def _fetch(self, cell: int) -> H3DataFrame:
         fetch_cells = [cell]
         if self.options.buffer_k > 0:
             from ukis_h3cellstore_spark import geo
@@ -141,24 +146,22 @@ class Traverser:
             fetch_cells = sorted(
                 set(geo.default_grid().grid_disk(cell, self.options.buffer_k))
             )
-        h3df = self.store.query_tableset_cells(
+        # the step's one Spark execution; the consumer reads the snapshot
+        return self.store.query_tableset_cells(
             self.tableset_name,
             fetch_cells,
             self.h3_resolution,
             query=self.query,
             do_uncompact=self.options.do_uncompact,
-        )
-        # skip-empty semantics (traversal.rs:452-456). These are
-        # per-step driver actions by design — the reference is the
-        # same pull-based client iterator; for the distributed path
-        # use traverse_apply.
-        return h3df, h3df.df.isEmpty()
+        ).materialize()
 
     def __next__(self) -> TraversedCell:
         """Yields cells in dispatch order; up to ``num_connections``
-        fetches run concurrently ahead of the consumer (the
-        reference's worker pool + bounded mpsc channel,
-        traversal.rs:207-327 — Spark handles the concurrent jobs)."""
+        steps run and materialize concurrently ahead of the consumer
+        (the reference's worker pool + bounded mpsc channel,
+        traversal.rs:207-327). Empty steps are skipped
+        (traversal.rs:452-456). If a step fails, the pool is closed
+        before its error is raised here."""
         from collections import deque
         from concurrent.futures import ThreadPoolExecutor
 
@@ -175,14 +178,26 @@ class Traverser:
                 self._next_submit += 1
                 self._futures.append((cell, self._pool.submit(self._fetch, cell)))
             if not self._futures:
-                self._pool.shutdown(wait=False)
+                self.close()
                 raise StopIteration
             cell, fut = self._futures.popleft()
-            h3df, empty = fut.result()
+            try:
+                h3df = fut.result()
+            except BaseException:
+                self.close()
+                raise
             self._pos += 1
-            if empty:
+            if h3df.count() == 0:
                 continue
             return TraversedCell(cell, h3df)
+
+    def close(self) -> None:
+        """Cancel the queued steps and stop the prefetch threads (a
+        running step finishes first); the iterator is then exhausted."""
+        if self._pool is not None:
+            self._futures.clear()
+            self._pool.shutdown(wait=True, cancel_futures=True)
+        self._next_submit = self._pos = len(self.traversal_cells)
 
 
 def _prefilter_cells(
